@@ -4,22 +4,25 @@ Re-creates the reference scheduler (internal/scheduler/scheduler.go:93-249)
 as one declarative DataFrame pipeline per round instead of a
 record-at-a-time queue consumer:
 
-  pages → extract (X1, pandas UDF) → explode → normalize (X2, pandas UDF)
-        → F1 .onion filter → F2 protocol filter → F3 extension filter
-        → F4 forbidden-hostname filter → FNV-1/64 hash (X3, pandas UDF)
+  pages → ONE Arrow kernel (``_extract_filter_batch``): extract (X1)
+        → normalize (X2) → F1 .onion / F2 protocol / F3 extension as one
+        combined regex (``_allowed_candidate_re``) → F4 forbidden-hostname
+        contains → FNV-1/64 hash (X3)
         → D2 in-round dedup → D1 anti-join vs seen → new frontier URLs
 
+The parity API ``schedule_candidates`` and the crawl's
+``pipeline.round.discover_new_urls`` both run this kernel through
+``extract_filtered_candidates``.
+
 Scale notes:
-* F1-F3 are pure column expressions over JVM-side ``parse_url`` — they
-  stay inside whole-stage codegen and Catalyst pushes them below the
-  explode where legal; predicate order (cheap before joins) mirrors the
-  reference's hand-ordering (scheduler.go:150-213) but is Catalyst's to
-  re-order.
-* F4 is a broadcast anti "theta" join (substring containment,
-  constraint/hostname.go:21-25).  For small blacklists (the common case)
-  it is compiled into an OR-chain column predicate — no join at all; past
-  a threshold it becomes an explicit ``broadcast()`` nested-loop anti
-  join.  Either way nothing shuffles.
+* The kernel factorizes candidates, so normalize / F1-F4 / hash run once
+  per DISTINCT raw url in a batch, and rejected candidates never cross
+  the Arrow pipe back to the JVM.
+* F4 is substring containment (constraint/hostname.go:21-25).  A list
+  blacklist runs inside the kernel; a DataFrame blacklist goes through
+  ``apply_hostname_blacklist``: collected into a codegen'd OR-chain
+  predicate when small, past a threshold an explicit ``broadcast()``
+  nested-loop anti join.  Either way nothing shuffles.
 * D1 shuffles both sides by url_hash (sort-merge / shuffled-hash anti
   join).  At 10^10-URL seen-set scale the optional sharded Bloom
   prefilter (operators/bloom.py) drops the candidates that cannot be new
@@ -27,30 +30,23 @@ Scale notes:
 * D2 uses hash-partitioned ``dropDuplicates`` — map-side partial dedup
   then one shuffle on url_hash, reused by D1 (same key ⇒ Catalyst plans a
   single exchange).
+* ``with_url_parts`` / ``extension_filter`` / ``hostname_allowed`` are
+  the same rules as JVM column expressions, for queries that apply a
+  single filter to a url column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import re as _re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
-from ..functions.fnv import fnv1_64, fnv1_64_np
-from ..functions.urltools import URL_RE, extract_urls, findall_urls, normalize_url, normalize_url_py, url_parts_py
-
-
-import re as _re
+from ..functions.fnv import fnv1_64_np
+from ..functions.urltools import findall_urls, normalize_url_py
 
 # Fast path: a URL matching this is PROVABLY a fixed point of
 # normalize_url_py (lowercase scheme+host, no port/userinfo/escape/
@@ -65,55 +61,6 @@ _ALREADY_NORMAL_RE = _re.compile(
     r"(/(?:[^/?#%]+/)*[^/?#%]+)?"      # path: no //, %, #; no trailing /
     r"(\?[^#%]*[^#%?])?$"              # optional non-empty query
 )
-
-_PARTS_RE = r"^([a-z0-9+.-]+)://([^/?#]*)((?:/[^?#]*)?)"
-
-
-def _extract_batch(pdf: pd.DataFrame, body_col: str, carry: list[str]) -> pd.DataFrame:
-    """One Arrow batch: bodies → flat candidate rows.  All hot loops are
-    pandas/numpy C-level; the exact python normalizer only runs for the
-    rare URL that is not already in normal form."""
-    bodies = pdf[body_col].fillna("")
-    found = [findall_urls(b) if b else [] for b in bodies]
-    counts = np.fromiter((len(l) for l in found), dtype=np.int64, count=len(found))
-    flat: list[str] = [u for lst in found for u in lst]
-    if not flat:
-        cols = {"src_url": [], **{c: [] for c in carry}}
-        return pd.DataFrame(
-            {
-                **cols,
-                "url": pd.Series([], dtype=object),
-                "url_hash": pd.Series([], dtype=np.int64),
-                "host": pd.Series([], dtype=object),
-                "scheme": pd.Series([], dtype=object),
-                "path": pd.Series([], dtype=object),
-            }
-        )
-    urls = pd.Series(flat, dtype=object)
-    normal = urls.str.match(_ALREADY_NORMAL_RE)
-    if not normal.all():
-        slow = urls[~normal].map(normalize_url_py)
-        urls = urls.copy()
-        urls[~normal] = slow
-        keep_mask = urls.notna()
-    else:
-        keep_mask = None
-
-    rep = np.repeat(np.arange(len(pdf)), counts)
-    out = pd.DataFrame({"src_url": pdf["url"].to_numpy()[rep]})
-    for c in carry:
-        out[c] = pdf[c].to_numpy()[rep]
-    out["url"] = urls.to_numpy()
-    if keep_mask is not None:
-        out = out[keep_mask.to_numpy()].reset_index(drop=True)
-    parts = out["url"].str.extract(_PARTS_RE)
-    out["scheme"] = parts[0]
-    # host: strip userinfo then port (rare post-normalization, vectorized)
-    netloc = parts[1].str.rpartition("@")[2]
-    out["host"] = netloc.str.replace(r":\d*$", "", regex=True)
-    out["path"] = parts[2].fillna("")
-    out["url_hash"] = fnv1_64_np(out["url"]).view(np.int64)
-    return out[["src_url", *carry, "url", "url_hash", "host", "scheme", "path"]]
 
 
 def _allowed_candidate_re(allowed_exts: tuple[str, ...]):
@@ -256,11 +203,14 @@ def extract_filtered_candidates(
 ) -> DataFrame:
     """X1+X2+X3 + F1-F4 in ONE mapInPandas stage, minimal columns out.
 
-    The scale hot path: pages(html, *carry) → (carry…, url, url_hash,
-    host).  Parent url strings are not read in, rejected candidates are
-    dropped in-kernel, and no scheme/path strings are emitted.  Results
-    are exactly ``extract_candidates_fused → F1 → F2 → F3 → F4`` (the
-    parity-pinned path); only the column set is narrower.
+    pages(html, *carry) → (carry…, url, url_hash, host): the only URL
+    extraction path, run by both ``schedule_candidates`` and the crawl's
+    ``discover_new_urls``.  Only the carry columns and the body are read
+    in, rejected candidates are dropped in-kernel (F1-F3 by
+    ``_allowed_candidate_re``, F4 by the ``forbidden`` substrings), and no
+    scheme/path strings are emitted.  A JVM-side ``regexp_extract_all``
+    extractor was measured 1.6-1.8x slower than this Arrow kernel at 2
+    and 8 cores: Java regex materializes every KB-scale body as UTF-16.
     """
     carry = list(carry_cols)
     body = F.col(body_col)
@@ -286,67 +236,6 @@ def extract_filtered_candidates(
     return src.mapInPandas(_run, schema=out_schema)
 
 
-def extract_candidates_fused(
-    pages: DataFrame,
-    body_col: str = "html",
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """X1+X2+X3+X10 fused into ONE ``mapInPandas`` stage: extract
-    (xurls-strict) → normalize (purell flags, vectorized fast path) →
-    parse components (Go net/url semantics) → FNV-1/64 (numpy).
-
-    pages(url, html, *carry) → one row per candidate with
-    (src_url, *carry, url, url_hash, host, scheme, path).  Full-width
-    parity API; the crawl hot path uses ``extract_filtered_candidates``
-    (narrower columns, filters in-kernel) instead.  A JVM-side
-    ``regexp_extract_all`` variant was benchmarked and REJECTED: Java
-    regex forces a UTF-16 materialization of every KB-scale body, and
-    measured 1.6-1.8x slower than this Arrow path at 2 and 8 cores
-    (BENCH/ab_extract.py).
-    """
-    carry = list(carry_cols)
-    in_cols = [F.col("url")] + [F.col(c) for c in carry]
-    body = F.col(body_col)
-    in_cols.append(
-        F.when(body.isNotNull(), body.cast("string"))
-        .otherwise(F.lit(""))
-        .alias("_body")
-    )
-    src = pages.select(*in_cols)
-    carry_schema = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name in carry
-    )
-    out_schema = (
-        "src_url string"
-        + carry_schema
-        + ", url string, url_hash long, host string, scheme string, path string"
-    )
-
-    def _run(batches):
-        for pdf in batches:
-            yield _extract_batch(pdf, "_body", carry)
-
-    return src.mapInPandas(_run, schema=out_schema)
-
-
-def extract_candidates(pages: DataFrame, body_col: str = "html") -> DataFrame:
-    """X1+X2: pages(url, html) → one row per extracted, normalized URL.
-
-    Keeps (src_url, url); nulls from unparseable URLs are dropped, exactly
-    as the reference skips them (scheduler.go:229-236).
-    """
-    body = F.col(body_col)
-    body = F.when(body.isNotNull(), body.cast("string")).otherwise(F.lit(""))
-    return (
-        pages.select(F.col("url").alias("src_url"), body.alias("_body"))
-        .select("src_url", F.explode(extract_urls(F.col("_body"))).alias("raw_url"))
-        .select("src_url", normalize_url(F.col("raw_url")).alias("url"))
-        .where(F.col("url").isNotNull())
-    )
-
-
 def with_url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
     """JVM-side component parsing: scheme/host/path columns via parse_url
     (X10).  parse_url returns host without port, matching Go's
@@ -359,17 +248,7 @@ def with_url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-# --- F1/F2/F3 as pure column predicates ------------------------------------
-
-def onion_filter(host: Column) -> Column:
-    """F1 (scheduler.go:150-153): hostname must end with '.onion'."""
-    return host.isNotNull() & host.endswith(".onion")
-
-
-def protocol_filter(scheme: Column) -> Column:
-    """F2 (scheduler.go:155-158): scheme must start with 'http'."""
-    return scheme.isNotNull() & scheme.startswith("http")
-
+# --- F3/F4 as column predicates --------------------------------------------
 
 def extension_filter(path: Column, allowed_extensions: tuple[str, ...]) -> Column:
     """F3 (scheduler.go:160-189): lowercased path ends with an allowed
@@ -448,11 +327,18 @@ def schedule_candidates(
     semantics, cache.go:9-12).  Rejected URLs are never marked seen —
     only survivors reach the caller's seen-append (scheduler_test.go:242-245).
     """
-    cand = extract_candidates_fused(pages, body_col=body_col)
-    cand = cand.where(onion_filter(F.col("host")))
-    cand = cand.where(protocol_filter(F.col("scheme")))
-    cand = cand.where(extension_filter(F.col("path"), config.allowed_extensions))
-    cand = apply_hostname_blacklist(cand, blacklist)
+    # X1-X3 + F1-F4: the crawl's kernel; a DataFrame blacklist is applied
+    # after it, as ``discover_new_urls`` does
+    listed = isinstance(blacklist, (list, tuple))
+    cand = extract_filtered_candidates(
+        pages.withColumnRenamed("url", "src_url"),
+        config,
+        forbidden=tuple(blacklist) if listed else (),
+        body_col=body_col,
+        carry_cols=("src_url",),
+    )
+    if blacklist is not None and not listed:
+        cand = apply_hostname_blacklist(cand, blacklist)
 
     # D2: in-round dedup (first occurrence wins in the reference; the set
     # is identical under any tie-break)

@@ -68,11 +68,14 @@ def discover_new_urls(
 ):
     """Scheduler stage with depth propagation.
 
-    Unlike ``operators.scheduler.schedule_candidates`` (the parity-exact
-    single-shot API), this variant carries the parent's depth through a
-    deterministic min() aggregation: depth = min(parent depth) + 1, and
-    applies robots disallow-prefix filtering (north-rule addition) so a
-    disallowed URL never enters the frontier.
+    Runs the same extraction kernel as
+    ``operators.scheduler.schedule_candidates`` (the parity-exact
+    single-shot API), ``extract_filtered_candidates``, but carries the
+    parent's depth instead of its url: the kernel emits per-batch
+    partial min(depth) rows, and a deterministic min() aggregation gives
+    depth = min(parent depth) + 1.  It also applies robots
+    disallow-prefix filtering (north-rule addition) so a disallowed URL
+    never enters the frontier.
     Output: (url, url_hash, host, depth) — or, with ``emit_edges``,
     the tuple (new_urls, edges(src,dst), cand_cache): the host-level
     link-graph delta for PageRank priority, sharing ONE persisted

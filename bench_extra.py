@@ -1,14 +1,16 @@
 """Extra measurement harness for the optimization round (guide §1).
 
 NOT part of the frozen driver contract — bench.py stays the measured
-surface.  This tool isolates individual queries with the noop sink,
-captures formatted plans, and profiles the crawl round per stage.
+surface.  This tool isolates individual queries with the noop sink and
+captures formatted plans.  For the crawl round's per-stage cost run
+``python3 perfbench/run.py --workload crawl_resume --seed 1 --seconds 20
+--trace 1``, which reports ``write.<table>.{s,jobs,rows,bytes}`` for
+every stage write.
 
 Usage:
   python bench_extra.py time  <query> [reps=3]     # noop-sink timing
   python bench_extra.py plan  <query> [out.txt]    # explain("formatted")
   python bench_extra.py sweep <q1> <q2> ...        # one warm session, all
-  python bench_extra.py crawl [rounds=3]           # headline profile
 
 Env mirrors bench.py: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_BENCH_CPUS (default 8).
@@ -98,75 +100,6 @@ def cmd_plans(names: list[str], suffix: str) -> None:
     spark.stop()
 
 
-def cmd_crawl(rounds: int = 3) -> None:
-    """Headline profile: bench.py's crawl setup with per-stage timing."""
-    import shutil
-    import tempfile
-
-    from bathyscaphe_spark.config import CrawlConfig
-    from bathyscaphe_spark.pipeline.driver import crawl
-    from bathyscaphe_spark.pipeline.synth import (
-        build_host_status,
-        build_pages,
-        build_seeds,
-    )
-    from bathyscaphe_spark.state.tables import TableCatalog
-
-    spark = _session()
-    sf = 0.1
-    n_pages = max(2000, int(1_500_000 * sf))
-    n_hosts = max(40, n_pages // 200)
-    pages = build_pages(
-        spark, n_pages=n_pages, n_hosts=n_hosts, links_per_page=8,
-        parallelism=CPUS,
-    ).repartition(CPUS * 2, "url").persist()
-    pages.count()
-    pages.select("url").mapInPandas(lambda it: it, "url string").count()
-    seeds = build_seeds(spark, pages, n_hosts)
-    host_status = build_host_status(pages).persist()
-    host_status.count()
-    cfg = CrawlConfig(per_host_budget=200, bloom_enabled=False)
-
-    # instrument stage writes
-    timings: list[tuple[str, float]] = []
-    orig = TableCatalog.stage_round
-
-    def timed(self, name, df, round_n, **kw):
-        t0 = time.perf_counter()
-        out = orig(self, name, df, round_n, **kw)
-        timings.append((f"write:{name}@{round_n}", round(time.perf_counter() - t0, 3)))
-        return out
-
-    TableCatalog.stage_round = timed
-
-    warm_root = tempfile.mkdtemp(prefix="bx_warm_")
-    try:
-        warm_pages = build_pages(spark, n_pages=2000, n_hosts=40).persist()
-        crawl(spark, warm_pages, build_seeds(spark, warm_pages, 10), warm_root,
-              cfg, max_rounds=2)
-        warm_pages.unpersist()
-    finally:
-        shutil.rmtree(warm_root, ignore_errors=True)
-    timings.clear()
-
-    state_root = tempfile.mkdtemp(prefix="bx_state_")
-    try:
-        t0 = time.perf_counter()
-        for r in range(rounds):
-            tr = time.perf_counter()
-            crawl(spark, pages, seeds if r == 0 else None, state_root, cfg,
-                  max_rounds=r + 1, host_status=host_status)
-            timings.append((f"ROUND {r}", round(time.perf_counter() - tr, 3)))
-        total = time.perf_counter() - t0
-    finally:
-        shutil.rmtree(state_root, ignore_errors=True)
-    TableCatalog.stage_round = orig
-    for k, v in timings:
-        print(f"{v:8.3f}  {k}")
-    print(f"{total:8.3f}  TOTAL crawl_{rounds}rounds")
-    spark.stop()
-
-
 def main() -> None:
     cmd = sys.argv[1]
     if cmd == "time":
@@ -177,8 +110,6 @@ def main() -> None:
         cmd_plan(sys.argv[2], sys.argv[3] if len(sys.argv) > 3 else None)
     elif cmd == "plans":
         cmd_plans(sys.argv[3:], sys.argv[2])
-    elif cmd == "crawl":
-        cmd_crawl(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
     else:
         raise SystemExit(f"unknown command {cmd}")
 

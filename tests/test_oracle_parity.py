@@ -4,10 +4,14 @@ Mirrors the driver's check: same parquet inputs, row-count + column-name
 + order-insensitive value comparison at sf0.01.
 """
 
+import sys
+from pathlib import Path
+
 import duckdb
 import pandas as pd
 import pytest
 
+REPO = Path(__file__).resolve().parent.parent
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -32,8 +36,7 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def _query_names():
-    import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(REPO))
     from bathyscaphe_spark.queries import ORACLES, QUERIES
 
     assert set(ORACLES) <= set(QUERIES)
@@ -67,7 +70,7 @@ def test_no_shadowed_top_level_names():
     import ast
     from collections import Counter
 
-    tree = ast.parse(open("/root/repo/bathyscaphe_spark/queries.py").read())
+    tree = ast.parse((REPO / "bathyscaphe_spark" / "queries.py").read_text())
     names = [
         n.name for n in tree.body
         if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from bathyscaphe_spark.config import CrawlConfig, MimeType
 from bathyscaphe_spark.functions.fnv import unsigned_to_signed
+from bathyscaphe_spark.functions.urltools import url_parts_py
 from bathyscaphe_spark.operators.scheduler import (
     apply_hostname_blacklist,
     schedule_candidates,
@@ -20,6 +21,24 @@ This domain is blacklisted: https://m.fbi.onion/test.php
 
 PHP_ONLY = CrawlConfig(allowed_mime_types=(MimeType("text/", ("php",)),))
 HTML_PHP = CrawlConfig(allowed_mime_types=(MimeType("text/", ("html", "php")),))
+
+
+def _reference_host(url):
+    """F1-F3 rebuilt from ``url_parts_py`` and the reference's rules
+    (scheduler.go:150-189), without the kernel's regex: the host ends
+    with '.onion', the scheme starts with 'http', and the lowercased path
+    ends with an allowed '.ext' or its last segment has no '.'.  Returns
+    the port-less host of a passing url, else None."""
+    scheme, host, path, _ = url_parts_py(url)
+    if not host.endswith(".onion") or not scheme.startswith("http"):
+        return None
+    lowered = path.lower()
+    by_ext = any(
+        lowered.endswith("." + e) for e in CrawlConfig().allowed_extensions
+    )
+    if by_ext or "." not in path.split("/")[-1]:
+        return host
+    return None
 
 
 def _pages(spark, body=SCENARIO_BODY, url="https://l.facebookcorewwwi.onion/test.php"):
@@ -210,25 +229,21 @@ class TestExtractFilterBatchPartialAgg:
 
     def _reference(self, rows):
         """Unfused reference: per-candidate extract→normalize→F1-F4."""
-        from bathyscaphe_spark.config import CrawlConfig
-        from bathyscaphe_spark.functions.fnv import fnv1_64_py
         from bathyscaphe_spark.functions.urltools import (
             findall_urls,
             normalize_url_py,
         )
-        from bathyscaphe_spark.operators.scheduler import _allowed_candidate_re
 
-        cand_re = _allowed_candidate_re(tuple(CrawlConfig().allowed_extensions))
         out = []
         for r in rows:
             for raw in findall_urls(r["_body"]):
                 u = normalize_url_py(raw)
                 if u is None:
                     continue
-                m = cand_re.match(u)
-                if m is None or "fbi.onion" in m.group(1):
+                host = _reference_host(u)
+                if host is None or "fbi.onion" in host:
                     continue
-                out.append((u, m.group(1), r.get("depth"), r.get("src_host")))
+                out.append((u, host, r.get("depth"), r.get("src_host")))
         return out
 
     BODIES = [
@@ -287,9 +302,11 @@ class TestExtractFilterBatchPartialAgg:
 
 def test_extract_filter_batch_property_vs_reference():
     """Randomized bodies (messy URLs: fragments, case, dot segments,
-    ports, unparseable, blacklisted, duplicates) through the partial-agg
-    kernel must — after the final min-aggregation the caller applies —
-    equal the unfused per-candidate reference pipeline."""
+    ports, userinfo, dotted directories, double extensions, unparseable,
+    blacklisted, duplicates) through the partial-agg kernel must — after
+    the final min-aggregation the caller applies — equal the unfused
+    per-candidate reference pipeline, whose F1-F3 do not use the
+    kernel's regex."""
     import pandas as pd
     from hypothesis import given, settings
     from hypothesis import strategies as st
@@ -323,6 +340,12 @@ def test_extract_filter_batch_property_vs_reference():
             "https://d.onion/pic.png",
             "http://%zz.onion/bad",
             "ftp://e.onion/f",
+            "https://a.onion/Y.PHP",
+            "https://a.onion/a.b/c",
+            "https://a.onion/x.php.png",
+            "https://c.onion?q=1",
+            "https://u:p@a.onion/x.php",
+            "https://a.onion:8080/x.php",
         ]
     )
     body = st.lists(url, max_size=6).map(
@@ -340,11 +363,8 @@ def test_extract_filter_batch_property_vs_reference():
                 u = normalize_url_py(raw)
                 if u is None:
                     continue
-                m = cand_re.match(u)
-                if m is None:
-                    continue
-                host = m.group(1)
-                if any(f in host for f in FORBIDDEN):
+                host = _reference_host(u)
+                if host is None or any(f in host for f in FORBIDDEN):
                     continue
                 k = (u, sh)
                 if k not in agg or depth < agg[k][0]:
