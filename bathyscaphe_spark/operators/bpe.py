@@ -163,8 +163,8 @@ def bpe_encode(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Apply a learned merge table to the corpus — ONE codegen
-    projection (chained replaces), no shuffle, no UDF.
+    """Apply a learned merge table to the corpus — chained replaces
+    over the distinct-word table, no UDF.
 
     Each document's eligible words (same filter as training) frame
     into the double-separator form; a word boundary is ≥ 4 separators,
@@ -183,6 +183,11 @@ def bpe_encode(
     scans over the corpus and N scans over the vocab (guide §2.3:
     shuffle/compute keys, not payloads).  Output-identical; the
     unchanged oracle replays the per-document form.
+
+    Precondition: ``id_col`` must be unique per row of ``docs``.  Token
+    counts are summed per id and joined back, so rows that share an id
+    each get the SUM of n_tokens over all of them (n_words stays per
+    row).  The in-repo caller (``q_bpe_encode``, ``doc_id``) is unique.
     """
     words = F.filter(
         F.split(F.lower(F.col(text_col)), r"\s+"),

@@ -279,6 +279,87 @@ def _edges_with_outdeg(edges: DataFrame):
     return deg, ed, nodes
 
 
+def _propagate(
+    edges: DataFrame,
+    iters: int,
+    out_col: str,
+    trusted: DataFrame | None = None,
+    dangling: bool = False,
+) -> DataFrame:
+    """The one fixed-point rank loop behind ``pagerank_fp``,
+    ``trustrank_fp`` and ``pagerank_dangling_fp``.  With teleport set T
+    and ``_t`` = [v ∈ T]:
+
+        r_0(v)     = (SCALE div |T|) · _t
+        r_{i+1}(v) = ((15·SCALE) div (100·|T|)) · _t
+                     + Σ_{(u→v)} (r_i(u)·85) div (100·outdeg(u))
+                     [+ (85·D_i) div (100·|T|),  D_i = Σ_{u dangling} r_i(u)]
+
+    T is every node when ``trusted`` is None (``_t`` is then the literal
+    1, which the optimizer folds away), else the graph nodes listed in
+    the first column of ``trusted`` (broadcast, persisted once as
+    ``(node, _t)``).  The bracketed dangling term is added when
+    ``dangling``; the wrappers use it only with T = every node.
+    |T| = 0 ⇒ every rank is 0.
+
+    Per iteration: one edge-sized join on ``src``, then one repartition
+    to the node caches' key/width so the groupBy and the node-keyed
+    left join add no exchange of their own; no Python runs in the loop.
+    The result is checkpointed eagerly before the ``finally`` releases
+    every cache made here.  Returns ``(node, <out_col>)``.
+    """
+    _, ed, nodes = _edges_with_outdeg(edges)
+    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    caches = [ed, nodes]
+    try:
+        if trusted is None:
+            state, t = nodes, F.lit(1)
+            n = nodes.count()  # one scalar; materializes both caches
+        else:
+            tb = F.broadcast(
+                trusted.select(F.col(trusted.columns[0]).alias("node")).distinct()
+            )
+            state = nodes.join(
+                tb.withColumn("_t", F.lit(1)), "node", "left"
+            ).select("node", F.coalesce("_t", F.lit(0)).alias("_t")).persist()
+            caches.append(state)
+            t = F.col("_t")
+            n = state.where("_t = 1").count()
+        if n == 0:
+            return nodes.select("node", F.lit(0).cast("long").alias(out_col))
+        base = (15 * SCALE) // (100 * n)
+        if dangling:
+            dang = nodes.join(ed.selectExpr("src AS node"), "node", "left_anti")
+            caches.append(dang.persist())
+        ranks = state.select("node", (t * (SCALE // n)).cast("long").alias(out_col))
+        for _ in range(iters):
+            contrib = (
+                ed.join(ranks, ed["src"] == ranks["node"])
+                .select(
+                    F.col("dst").alias("node"),
+                    F.expr(
+                        f"({out_col} * {DAMP_NUM}) div ({DAMP_DEN} * outdeg)"
+                    ).alias("c"),
+                )
+                .repartition(P, "node")
+                .groupBy("node")
+                .agg(F.sum("c").alias("contrib"))
+            )
+            nxt = state.join(contrib, "node", "left")
+            rank = t * F.lit(base) + F.coalesce(F.col("contrib"), F.lit(0))
+            if dangling:
+                dmass = ranks.join(dang, "node", "leftsemi").agg(
+                    F.coalesce(F.sum(out_col), F.lit(0)).alias("_dm")
+                )
+                nxt = nxt.crossJoin(F.broadcast(dmass))
+                rank = rank + F.expr(f"(_dm * {DAMP_NUM}) div ({DAMP_DEN} * {n})")
+            ranks = nxt.select("node", rank.cast("long").alias(out_col))
+        return ranks.localCheckpoint(eager=True)
+    finally:
+        for c in caches:
+            c.unpersist()
+
+
 def pagerank_fp(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Fixed-point PageRank over ``edges(src: long, dst: long)``.
 
@@ -290,45 +371,7 @@ def pagerank_fp(edges: DataFrame, iters: int = 3) -> DataFrame:
     r_{i+1}(v) = (15·SCALE) div (100·N)
                  + Σ_{(u→v)} (r_i(u)·85) div (100·outdeg(u))
     """
-    deg, ed, nodes = _edges_with_outdeg(edges)
-    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    n = nodes.count()  # one scalar; materializes both caches
-    if n == 0:
-        df = nodes.withColumn("rank_fp", F.lit(0).cast("long"))
-        nodes.unpersist()
-        ed.unpersist()
-        return df
-    base = (15 * SCALE) // (100 * n)
-    try:
-        ranks = nodes.withColumn("rank_fp", F.lit(SCALE // n).cast("long"))
-        for _ in range(iters):
-            contrib = (
-                ed.join(ranks, ed["src"] == ranks["node"])
-                .select(
-                    F.col("dst").alias("node"),
-                    F.expr(
-                        f"(rank_fp * {DAMP_NUM}) div ({DAMP_DEN} * outdeg)"
-                    ).alias("c"),
-                )
-                # explicit repartition to the caches' key/width: the
-                # groupBy then adds no exchange of its own and the
-                # node-keyed left join below is co-partitioned (r6)
-                .repartition(P, "node")
-                .groupBy("node")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            ranks = nodes.join(contrib, "node", "left").select(
-                "node",
-                (F.lit(base) + F.coalesce(F.col("contrib"), F.lit(0)))
-                .cast("long")
-                .alias("rank_fp"),
-            )
-        # materialize before unpersisting the edge cache
-        ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        ed.unpersist()
-        nodes.unpersist()
-    return ranks
+    return _propagate(edges, iters, "rank_fp")
 
 
 def opic_fp(edges: DataFrame, sweeps: int = 4) -> DataFrame:
@@ -717,63 +760,15 @@ def trustrank_fp(
         r_{i+1}(v)= (15·SCALE) div (100·|T|) · [v ∈ T]
                     + Σ_{(u→v)} (r_i(u)·85) div (100·outdeg(u))
 
-    Same integer fixed-point discipline and scale shape as
-    ``pagerank_fp`` (one join + one aggregation per iteration, persisted
-    edge⋈outdeg and node caches, bit-identical at any parallelism);
+    The same loop as ``pagerank_fp`` (``_propagate``: one join + one
+    aggregation per iteration, persisted edge⋈outdeg and node caches,
+    integer fixed point, bit-identical at any parallelism);
     the trusted set broadcast-joins (it is human-curated — thousands of
     rows at web scale).
 
     Returns ``(node: long, trust_fp: long)``.
     """
-    deg, ed, nodes = _edges_with_outdeg(edges)
-    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    t = F.broadcast(
-        trusted.select(F.col(trusted.columns[0]).alias("node")).distinct()
-    )
-    tagged = nodes.join(
-        t.withColumn("_t", F.lit(1)), "node", "left"
-    ).select("node", F.coalesce("_t", F.lit(0)).alias("_t")).persist()
-    n_t = tagged.where("_t = 1").count()
-    if n_t == 0:
-        df = nodes.select("node", F.lit(0).cast("long").alias("trust_fp"))
-        nodes.unpersist()
-        tagged.unpersist()
-        ed.unpersist()
-        return df
-    base = (15 * SCALE) // (100 * n_t)
-    try:
-        ranks = tagged.select(
-            "node",
-            (F.col("_t") * (SCALE // n_t)).cast("long").alias("trust_fp"),
-        )
-        for _ in range(iters):
-            contrib = (
-                ed.join(ranks, ed["src"] == ranks["node"])
-                .select(
-                    F.col("dst").alias("node"),
-                    F.expr(
-                        f"(trust_fp * {DAMP_NUM}) div ({DAMP_DEN} * outdeg)"
-                    ).alias("c"),
-                )
-                .repartition(P, "node")
-                .groupBy("node")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            ranks = tagged.join(contrib, "node", "left").select(
-                "node",
-                (
-                    F.col("_t") * F.lit(base)
-                    + F.coalesce(F.col("contrib"), F.lit(0))
-                )
-                .cast("long")
-                .alias("trust_fp"),
-            )
-        ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        ed.unpersist()
-        tagged.unpersist()
-        nodes.unpersist()
-    return ranks
+    return _propagate(edges, iters, "trust_fp", trusted=trusted)
 
 
 def domain_edges(
@@ -844,67 +839,13 @@ def pagerank_dangling_fp(edges: DataFrame, iters: int = 3) -> DataFrame:
 
     Integer micro-units throughout — bit-identical at any parallelism.
 
-    Plan: same persisted node set / edges⋈outdeg as ``pagerank_fp``;
-    the dangling set is one anti-join computed ONCE and persisted;
+    Plan: ``_propagate``, the same persisted node set / edges⋈outdeg
+    as ``pagerank_fp``; the dangling set is one anti-join computed ONCE
+    and persisted;
     each iteration adds one 1-row mass aggregate attached back as a
     broadcast scalar (never a collect).
     """
-    deg, ed, nodes = _edges_with_outdeg(edges)
-    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    n = nodes.count()
-    if n == 0:
-        df = nodes.withColumn("rank_fp", F.lit(0).cast("long"))
-        nodes.unpersist()
-        ed.unpersist()
-        return df
-    base = (15 * SCALE) // (100 * n)
-    dang = nodes.join(
-        ed.select(F.col("src").alias("node")), "node", "left_anti"
-    ).persist()
-    try:
-        ranks = nodes.withColumn("rank_fp", F.lit(SCALE // n).cast("long"))
-        for _ in range(iters):
-            dmass = (
-                ranks.join(dang, "node", "leftsemi")
-                .agg(F.coalesce(F.sum("rank_fp"), F.lit(0)).alias("_dm"))
-            )
-            contrib = (
-                ed.join(ranks, ed["src"] == ranks["node"])
-                .select(
-                    F.col("dst").alias("node"),
-                    F.expr(
-                        f"(rank_fp * {DAMP_NUM}) div ({DAMP_DEN} * outdeg)"
-                    ).alias("c"),
-                )
-                # explicit repartition to the caches' key/width: the
-                # groupBy then adds no exchange of its own and the
-                # node-keyed left join below is co-partitioned (r6)
-                .repartition(P, "node")
-                .groupBy("node")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            ranks = (
-                nodes.join(contrib, "node", "left")
-                .crossJoin(F.broadcast(dmass))
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.coalesce(F.col("contrib"), F.lit(0))
-                        + F.expr(
-                            f"(_dm * {DAMP_NUM}) div ({DAMP_DEN} * {n})"
-                        )
-                    )
-                    .cast("long")
-                    .alias("rank_fp"),
-                )
-            )
-        ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        ed.unpersist()
-        dang.unpersist()
-        nodes.unpersist()
-    return ranks
+    return _propagate(edges, iters, "rank_fp", dangling=True)
 
 
 def lpa_communities(edges: DataFrame, iters: int = 3) -> DataFrame:

@@ -28,6 +28,10 @@ def _reference_pagerank(edges, iters):
     return rank
 
 
+def _cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 @pytest.mark.parametrize("iters", [1, 3])
 def test_pagerank_matches_reference(spark, iters):
     edges = spark.createDataFrame(EDGES, "src long, dst long")
@@ -396,9 +400,10 @@ class TestTrustRank:
 
         e = spark.createDataFrame(edges, "src long, dst long").repartition(parts)
         t = spark.createDataFrame([(x,) for x in trusted], "node long")
-        return {
-            r.node: r.trust_fp for r in trustrank_fp(e, t, iters=iters).collect()
-        }
+        spark.catalog.clearCache()
+        out = trustrank_fp(e, t, iters=iters)
+        assert _cache_empty(spark)  # every case releases its caches, |T| = 0 too
+        return {r.node: r.trust_fp for r in out.collect()}
 
     def test_trust_decays_and_spam_scores_zero(self, spark):
         # trusted chain 1→2→3; farm 10↔11 also links INTO 2 but gets
@@ -428,6 +433,16 @@ class TestTrustRank:
         a = self._run(spark, edges, [0, 7, 14], parts=1)
         b = self._run(spark, edges, [0, 7, 14], parts=13)
         assert a == b
+
+    def test_all_nodes_trusted_equals_pagerank(self, spark):
+        # T = every node turns the teleport term into PageRank's: the
+        # two public functions must agree row for row
+        edges = EDGES + [(5, 6), (6, 7), (7, 5), (8, 9), (10, 11)]
+        nodes = sorted({n for e in edges for n in e})
+        got = self._run(spark, edges, nodes, iters=3)
+        e = spark.createDataFrame(edges, "src long, dst long")
+        want = {r.node: r.rank_fp for r in pagerank_fp(e, iters=3).collect()}
+        assert got == want and len(got) == 11
 
 
 class TestDomainEdges:
@@ -770,3 +785,19 @@ class TestStarCC:
     def test_empty_edges(self, spark):
         df = spark.createDataFrame([], "src long, dst long")
         assert connected_components_star(df).count() == 0
+
+
+# --- cache lifetime of the rank family ---------------------------------------
+
+
+@pytest.mark.parametrize("fn", ["pagerank_fp", "trustrank_fp", "pagerank_dangling_fp"])
+@pytest.mark.parametrize("rows", [EDGES, []], ids=["graph", "empty"])
+def test_rank_family_releases_caches(spark, fn, rows):
+    from bathyscaphe_spark.operators import graph
+
+    spark.catalog.clearCache()
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    args = (spark.createDataFrame([(1,)], "node long"),) if fn == "trustrank_fp" else ()
+    out = getattr(graph, fn)(edges, *args, iters=2)
+    assert _cache_empty(spark)
+    assert out.count() == len({n for e in rows for n in e})
