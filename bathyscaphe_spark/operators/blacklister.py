@@ -48,12 +48,21 @@ HOST_FAILURES_SCHEMA = StructType(
 BLACKLIST_SCHEMA = StructType([StructField("hostname", StringType())])
 
 
+def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty frame the optimizer can SEE is empty: ``limit(0)`` folds
+    to an empty ``LocalRelation`` (``OptimizeLimitZero``), so
+    ``PropagateEmptyRelation`` drops the joins and unions over it at plan
+    time.  ``createDataFrame([])`` alone is an RDD scan that every
+    consumer ran as a job just to find it empty."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
 def empty_host_failures(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], HOST_FAILURES_SCHEMA)
+    return _empty(spark, HOST_FAILURES_SCHEMA)
 
 
 def empty_blacklist(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], BLACKLIST_SCHEMA)
+    return _empty(spark, BLACKLIST_SCHEMA)
 
 
 def process_timeouts(

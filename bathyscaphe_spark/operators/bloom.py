@@ -19,11 +19,12 @@ when the capacity doubles — amortized O(1) rescans):
   local bit array (numpy, vectorized) and ``treeReduce(bitwise_or)``
   combines them logarithmically.
 
-Exactness: the Bloom filter is only a router.  Candidates that are
-*definitely new* (bit miss) skip the shuffle entirely; the *maybe seen*
-remainder goes through the exact anti-join.  No false drops, strictly
-less shuffle volume — at 10^10-frontier scale the bit-miss fast path is
-the common case for freshly discovered URLs.
+Exactness: the Bloom filter is only a router.  Every candidate is probed
+once; the exact anti-join matches only *maybe seen* rows (bit hits), so a
+*definitely new* row (bit miss) is kept without a key comparison and no
+row is ever falsely dropped.  One pass, not a union of a bit-miss and a
+bit-hit branch: the two branches share no exchange, so Spark re-ran the
+whole candidate plan once per branch (see :func:`_routed_anti_join`).
 """
 
 from __future__ import annotations
@@ -158,6 +159,38 @@ class ShardedBloom:
         return bits.all(axis=1)
 
 
+def _routed_anti_join(
+    cand: DataFrame, col: str, might_contain, keys: list[DataFrame]
+) -> DataFrame:
+    """Exact ``cand`` anti-join every key set in ``keys`` on ``col``,
+    routed by a membership filter with false positives only.
+
+    ``might_contain`` is a pandas UDF (long → boolean) probing the
+    filter.  It runs ONCE per row, as a column, and each anti-join
+    matches on ``col = key AND _maybe_seen``: a bit-miss row can never
+    match, so it is kept without a key comparison, and a bit hit is kept
+    iff the exact join finds no key.  Output identical to the plain
+    anti-join (``x ∉ A ∪ B`` ⟺ ``x ∉ A ∧ x ∉ B`` for several key sets).
+
+    One pass rather than the union of a bit-miss branch and a verified
+    bit-hit branch: the union's branches shared no exchange (Catalyst
+    pushed each branch's ``_maybe_seen`` filter below the caller's
+    dedup aggregate), so the whole candidate plan, the crawl's Python
+    URL-extraction kernel included, ran once per branch.  The trade-off:
+    under a sort-merge join the bit-miss rows now travel through the
+    join's shuffle as well, a narrow key shuffle instead of a second run
+    of the input plan.
+    """
+    flagged = cand.withColumn("_maybe_seen", might_contain(F.col(col)))
+    for k in keys:
+        flagged = flagged.join(
+            k.select(F.col(col).alias("_seen_key")),
+            (F.col(col) == F.col("_seen_key")) & F.col("_maybe_seen"),
+            "left_anti",
+        )
+    return flagged.drop("_maybe_seen")
+
+
 def bloom_anti_join(
     cand: DataFrame,
     seen_keys: DataFrame,
@@ -165,11 +198,9 @@ def bloom_anti_join(
     bloom: ShardedBloom,
     tail: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact anti-join accelerated by the Bloom router.
-
-    ``definitely new`` (bit miss) bypasses the shuffle; ``maybe seen``
-    goes through the exact left-anti join.  Result set is identical to a
-    plain anti-join.
+    """Exact anti-join accelerated by the Bloom router: only bit hits
+    are compared with ``seen_keys`` (:func:`_routed_anti_join`).  Result
+    set is identical to a plain anti-join.
 
     ``tail`` — optional second key set verified by its own anti-join
     (``x ∉ seen ∪ tail`` ⟺ ``x ∉ seen ∧ x ∉ tail``): the bucketed
@@ -177,27 +208,18 @@ def bloom_anti_join(
     join rather than a union so the bucketed base's exchange-free scan
     survives (a union would erase its output partitioning).
     PRECONDITION: ``bloom`` must cover ``seen_keys ∪ tail`` — the
-    driver's incrementally-folded filter does (every round's Δ is
-    or_delta'd in before the next round runs).
+    driver's incrementally-folded filter does (every committed round's
+    Δ is or_delta'd in before the next round that uses the filter).
     """
-    spark = cand.sparkSession
-    b = spark.sparkContext.broadcast(bloom)
+    b = cand.sparkSession.sparkContext.broadcast(bloom)
 
     @pandas_udf(BooleanType())
     def _might_contain(s: pd.Series) -> pd.Series:
         h = s.to_numpy(dtype=np.int64, na_value=0)
         return pd.Series(b.value.might_contain_np(h))
 
-    flagged = cand.withColumn("_maybe_seen", _might_contain(F.col(col)))
-    definitely_new = flagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = (
-        flagged.where(F.col("_maybe_seen"))
-        .drop("_maybe_seen")
-        .join(seen_keys, col, "left_anti")
-    )
-    if tail is not None:
-        maybe = maybe.join(tail, col, "left_anti")
-    return definitely_new.unionByName(maybe)
+    keys = [seen_keys] if tail is None else [seen_keys, tail]
+    return _routed_anti_join(cand, col, _might_contain, keys)
 
 
 # -- shard-resident probing (the broadcast-won't-fit scale path) -----------
@@ -311,11 +333,4 @@ def bloom_anti_join_files(
             out[m] = bits.all(axis=1)
         return pd.Series(out)
 
-    flagged = cand.withColumn("_maybe_seen", _might_contain(F.col(col)))
-    definitely_new = flagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = (
-        flagged.where(F.col("_maybe_seen"))
-        .drop("_maybe_seen")
-        .join(seen_keys, col, "left_anti")
-    )
-    return definitely_new.unionByName(maybe)
+    return _routed_anti_join(cand, col, _might_contain, [seen_keys])

@@ -23,8 +23,8 @@ are VERIFIED: a shard whose table fills is rebuilt at doubled capacity
 might_contain must have false positives only).
 
 Exactness contract: identical to the Bloom router — ``might_contain``
-has false positives only, so the bit-miss fast path is exact and the
-maybe-seen remainder goes through the anti-join.
+has false positives only, so a miss is kept without a key comparison
+and only the maybe-seen rows are matched by the exact anti-join.
 """
 
 from __future__ import annotations
@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
+
+from .bloom import _routed_anti_join
 
 _SLOTS = 4
 _FP_BITS = 16
@@ -287,19 +289,12 @@ def cuckoo_anti_join(
     cand: DataFrame, seen_keys: DataFrame, col: str, cf: CuckooFilter
 ) -> DataFrame:
     """Exact anti-join with the cuckoo router (same contract as
-    bloom_anti_join: bit-miss rows skip the shuffle, result identical)."""
-    spark = cand.sparkSession
-    b = spark.sparkContext.broadcast(cf)
+    bloom_anti_join: only filter hits are compared with ``seen_keys``,
+    result identical)."""
+    b = cand.sparkSession.sparkContext.broadcast(cf)
 
     @pandas_udf(BooleanType())
     def _might_contain(s: pd.Series) -> pd.Series:
         return pd.Series(b.value.might_contain_np(s.to_numpy(dtype=np.int64, na_value=0)))
 
-    flagged = cand.withColumn("_maybe_seen", _might_contain(F.col(col)))
-    definitely_new = flagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = (
-        flagged.where(F.col("_maybe_seen"))
-        .drop("_maybe_seen")
-        .join(seen_keys, col, "left_anti")
-    )
-    return definitely_new.unionByName(maybe)
+    return _routed_anti_join(cand, col, _might_contain, [seen_keys])

@@ -1511,9 +1511,10 @@ def bff_paragraph_dedup(
     optional ShardedBloom over it (built once, ``or_delta``-folded with
     ``paragraph_table(batch)`` after each batch — O(Δ) filter
     maintenance, the same discipline as the URL-seen router).  With the
-    router, provably-fresh paragraphs (bit miss) BYPASS the shuffle
-    against the standing table entirely; bit hits are re-verified by
-    the exact anti-join, so the output equals the plain anti-join
+    router, provably-fresh paragraphs (bit miss) are kept without a
+    key comparison; bit hits are re-verified by the exact anti-join
+    (one join over one probe column), so the output equals the plain
+    anti-join
     bit-for-bit (the d1_bloom exactness contract).  A production run
     at Dolma's scale may skip re-verification and accept the filter's
     fpp — that trade is the caller's, not baked in.
@@ -1527,7 +1528,7 @@ def bff_paragraph_dedup(
     first included).
 
     Scale design: one posexplode, one broadcast-bloom probe (Arrow
-    batch), one anti-join that touches only bit-hit rows, one
+    batch), one anti-join that compares only bit-hit rows, one
     window over par_hash for first-wins (near-uniform key — the
     hottest paragraph still groups to one partition's row stream),
     one per-doc reassembly agg.  Nothing quadratic, no driver state.

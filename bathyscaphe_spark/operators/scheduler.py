@@ -345,7 +345,7 @@ def schedule_candidates(
     cand = cand.dropDuplicates(["url_hash"])
 
     # D1: exact anti-join vs live seen entries, optionally routed through
-    # the sharded Bloom prefilter (bit-miss candidates skip the shuffle)
+    # the sharded Bloom prefilter (only bit hits are compared with seen)
     if seen is not None:
         if round_ts is None:
             round_ts = F.current_timestamp()

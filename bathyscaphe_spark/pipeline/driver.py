@@ -150,17 +150,26 @@ def _load_persisted_bloom(
         bloom = load_shards(d)
     except Exception:
         return None, 0  # unreadable snapshot: rebuild from the table
-    deltas = [
-        df
-        for r in range(int(meta["covers_through"]) + 1, next_round)
-        if (df := catalog.read_round("seen", r)) is not None
-    ]
-    if deltas:
-        fold = deltas[0]
-        for df in deltas[1:]:
-            fold = fold.unionByName(df)
-        bloom = bloom.or_delta(fold.select("url_hash"), "url_hash")
+    bloom = _fold_seen_rounds(
+        catalog, bloom, range(int(meta["covers_through"]) + 1, next_round)
+    )
     return bloom, int(meta["capacity"])
+
+
+def _fold_seen_rounds(
+    catalog: TableCatalog, bloom: ShardedBloom, rounds
+) -> ShardedBloom:
+    """``bloom`` ∪ the committed seen Δs of ``rounds`` in ONE or_delta
+    (bit-identical to folding them one at a time: insertion is an OR)."""
+    deltas = [
+        df for r in rounds if (df := catalog.read_round("seen", r)) is not None
+    ]
+    if not deltas:
+        return bloom
+    fold = deltas[0]
+    for df in deltas[1:]:
+        fold = fold.unionByName(df)
+    return bloom.or_delta(fold.select("url_hash"), "url_hash")
 
 
 def _seen_store_meta(catalog: TableCatalog) -> str:
@@ -288,6 +297,11 @@ def crawl(
     stats: list[RoundStats] = []
     seen_bloom = None  # incrementally folded across rounds (O(Δ)/round)
     bloom_capacity = 0
+    # rounds whose committed seen Δ is not folded into seen_bloom yet:
+    # folded at the top of the next round that reads the filter, so the
+    # last round's Δ (which nothing in this call reads — resume re-folds
+    # from the snapshot) and Δs a rebuild covers cost no Spark job
+    unfolded: list[int] = []
     seen_store, seen_store_round = (
         _load_seen_store(catalog, config) if config.seen_bucketed else (None, -1)
     )
@@ -296,8 +310,12 @@ def crawl(
         if frontier is None or catalog.rows_in_round("frontier", round_n) == 0:
             break  # frontier exhausted (row count from footers — no job)
         if config.bloom_enabled and seen_count is None:
-            seen_df = catalog.read_deltas("seen")
-            seen_count = seen_df.count() if seen_df is not None else 0
+            # the rows read_deltas("seen") would scan, from the parquet
+            # footers — no Spark job
+            seen_count = sum(
+                catalog.rows_in_round("seen", r)
+                for r in catalog._committed_rounds("seen", None)
+            )
         # S11: overlay any runtime config mutation (set_config) published
         # since the last boundary — the reference's ConfigAPI pub/sub
         # reload, at round granularity
@@ -333,11 +351,15 @@ def crawl(
                     fpp=round_config.bloom_fpp,
                     num_shards=round_config.bloom_shards,
                 )
+                unfolded = []  # the rebuild read every committed Δ
                 if round_config.bloom_persist:
                     _save_persisted_bloom(
                         catalog, seen_bloom, bloom_capacity,
                         round_config, round_n - 1,
                     )
+        elif use_inc and unfolded:
+            seen_bloom = _fold_seen_rounds(catalog, seen_bloom, unfolded)
+            unfolded = []
         s = run_round(
             catalog,
             pages,
@@ -361,13 +383,10 @@ def crawl(
         if seen_count is not None:
             seen_count += s.discovered
         if seen_bloom is not None and s.discovered:
-            # fold this round's committed seen Δ — bit-identical to a
-            # from-scratch rebuild of the same keys at the same capacity
-            delta = catalog.read_round("seen", round_n)
-            if delta is not None:
-                seen_bloom = seen_bloom.or_delta(
-                    delta.select("url_hash"), "url_hash"
-                )
+            # this round's seen Δ is folded lazily (see ``unfolded``) —
+            # bit-identical to a from-scratch rebuild of the same keys
+            # at the same capacity
+            unfolded.append(round_n)
     if own_host_status:
         host_status.unpersist()
     return stats

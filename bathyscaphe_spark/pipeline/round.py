@@ -269,11 +269,10 @@ def run_round(
     # forbidden-hostnames (S11: mutable at round boundaries via
     # state/configstore.set_config — mirrors the reference where both
     # the blacklister and operators PUT into the same ConfigAPI key)
+    # (None = no committed state: blacklist_df is the empty frame)
     _bl_head = catalog.head_of_state(
         "blacklist", "hostname", _F4_EXPR_MAX + 1
-    )
-    if _bl_head is None:  # no committed state: blacklist_df is empty
-        _bl_head = [r[0] for r in blacklist_df.limit(_F4_EXPR_MAX + 1).collect()]
+    ) or []
     _conf_bl = list(config.forbidden_hostnames)
     if len(_bl_head) <= _F4_EXPR_MAX:
         blacklist_pred = tuple(sorted(set(_bl_head) | set(_conf_bl)))

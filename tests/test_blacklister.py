@@ -31,6 +31,39 @@ def _failures(spark, rows):
     )
 
 
+def test_empty_states_are_empty_local_relations(spark):
+    """The empty states must be visibly empty to the optimizer (an empty
+    ``LocalRelation``), not an RDD scan that a job has to run to find
+    nothing in."""
+    for df in (empty_blacklist(spark), empty_host_failures(spark)):
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+        assert plan.data().isEmpty()
+    assert empty_blacklist(spark).collect() == []
+    assert empty_host_failures(spark).columns == ["host", "count", "expires_ts"]
+
+
+def test_process_timeouts_over_empty_states_scans_no_rdd(spark):
+    """Over empty states the anti-join, the full-outer join and the union
+    fold away at plan time: neither output plan scans an RDD, and the
+    outputs are unchanged (one confirmed timeout below threshold)."""
+    timeouts = spark.sql(
+        "SELECT * FROM VALUES ('https://down.onion/x', 'down.onion') AS t(url, host)"
+    )
+    status = spark.sql(
+        "SELECT * FROM VALUES ('down.onion', false) AS t(host, up)"
+    )
+    hf, bl = process_timeouts(
+        timeouts, empty_host_failures(spark), empty_blacklist(spark),
+        status, CrawlConfig(), RTS(),
+    )
+    assert [(r["host"], r["count"]) for r in hf.collect()] == [("down.onion", 1)]
+    assert bl.collect() == []
+    for df in (hf, bl):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+
+
 def test_host_up_removes_counter(spark):
     # blacklister_test.go:52-78: response received ⇒ counter removed
     cfg = CrawlConfig()
